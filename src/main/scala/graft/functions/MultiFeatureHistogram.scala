@@ -18,11 +18,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * (#features + 1) before the map-side combine — pure CPU overhead that
   * scales with feature count (the reference's flagship workload has 190
   * columns). Here the aggregation buffer is one flat Long array of
-  * (numFeatures + 1) x (numBins + 1) x numClasses cells:
+  * (numFeatures + 1) x numBins x numClasses cells, where numBins is the
+  * largest edge count plus one:
   *
-  *   - feature f, bin b (upper-edge index; bin numBins = the +inf
-  *     catch-all), class k -> count of rows with value <= edges(f)(b)
-  *     boundary semantics identical to [[graft.tree.SplitSearch.snapToEdges]];
+  *   - feature f, bin b < edges(f).size, class k -> count of rows whose
+  *     smallest edge >= value is edges(f)(b), so the counts at every edge
+  *     are exact; bin edges(f).size is the +inf catch-all, which also
+  *     takes NaN;
   *   - the extra feature block (index numFeatures) is the node sentinel:
   *     class counts over ALL rows regardless of feature nulls.
   *
@@ -35,6 +37,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * there. With the `nodeIndex` dimension the SAME single job serves a
   * whole tree LEVEL: every pending node's histograms come back in one
   * row — the level-wise trainer's per-level cost is exactly one scan.
+  *
+  * The buffer is one JVM array that `serialize` copies into one byte
+  * array, so its cell count is checked at construction against
+  * [[MultiFeatureHistogram.MaxCells]]: a level too wide for it (say depth
+  * 15 at 190 features) fails before any buffer is allocated.
   */
 case class MultiFeatureHistogram(
     featuresArray: Expression,     // ArrayType(DoubleType): packed feature slots
@@ -48,10 +55,15 @@ case class MultiFeatureHistogram(
 ) extends TypedImperativeAggregate[Array[Long]] {
 
   private val numFeatures = edges.size
-  private val numBins = edges.map(_.size).max + 1  // +1 for the +inf bucket
+  val numBins: Int = edges.map(_.size).maxOption.getOrElse(0) + 1 // +1: the +inf bucket
+  private val cells: Long = numNodes.toLong * (numFeatures + 1) * numBins * numClasses
+  require(cells <= MultiFeatureHistogram.MaxCells,
+    s"histogram buffer of $numNodes nodes x ${numFeatures + 1} feature slots x " +
+      s"$numBins bins x $numClasses classes = $cells cells exceeds " +
+      s"${MultiFeatureHistogram.MaxCells} (8-byte cells in one byte array)")
   private val blockSize = numBins * numClasses
   private val nodeLen = (numFeatures + 1) * blockSize
-  private val bufferLen = numNodes * nodeLen
+  private val bufferLen = cells.toInt
   // immutable snapshot for executor-side binary search
   private val edgeArrays: Array[Array[Double]] = edges.map(_.toArray).toArray
 
@@ -133,4 +145,10 @@ case class MultiFeatureHistogram(
       newChildren: IndexedSeq[Expression]): MultiFeatureHistogram =
     copy(featuresArray = newChildren(0), classIndex = newChildren(1),
       nodeIndex = newChildren(2))
+}
+
+object MultiFeatureHistogram {
+  /** Largest buffer whose serialized form (8 bytes per cell) fits one JVM
+    * byte array. */
+  val MaxCells: Long = Int.MaxValue / 8
 }

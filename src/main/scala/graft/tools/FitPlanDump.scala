@@ -11,10 +11,12 @@ import graft.tree.{Criterion, SplitSearch}
   * entry executes once per tree level — for the r20 plans/ audit.
   *
   * Modes (args(0)):
-  *   exact       — fit_depth4_entropy's level shape (windowed cum)
-  *   partitioned — fit_depth4_entropy_scalable's (bucketed prefix sums)
-  *   binned      — the pipeline path with maxBins-style edges
-  *                 (fit_depth4_entropy_scalable_wide190's shape, narrow)
+  *   exact        — fit_depth4_entropy's level shape (windowed cum)
+  *   partitioned  — fit_depth4_entropy_scalable's (bucketed prefix sums)
+  *   exact_before — the r20 string-struct melt + windowed cum subplan
+  * Binned fits run no winners frame: their level job is the
+  * MultiFeatureHistogram aggregate, whose per-level plans and metrics
+  * `python3 perfbench/run.py --workload binned_wide --trace 1` reports.
   * Optional args(1) = sf dir.
   */
 object FitPlanDump {
@@ -32,11 +34,6 @@ object FitPlanDump {
     val targets = Seq[Any]("A", "N", "R")
     val df = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select((features :+ "l_returnflag").map(col): _*)
-    val edges = Map(
-      "l_quantity" -> Seq(10.0, 25.0, 40.0),
-      "l_extendedprice" -> Seq(10000.0, 40000.0, 70000.0),
-      "l_discount" -> Seq(0.03, 0.06),
-      "l_tax" -> Seq(0.02, 0.05))
     val ranges = features.map(f => f -> (0.0, 100000.0)).toMap
     val frame = mode match {
       case "exact" =>
@@ -45,10 +42,7 @@ object FitPlanDump {
       case "partitioned" =>
         SplitSearch.searchLevelFrame(df, lit(0), features, "l_returnflag",
           targets, Criterion.Entropy, cumBuckets = Some(32), cumRanges = ranges)
-      case "binned" =>
-        SplitSearch.searchLevelFrame(df, lit(0), features, "l_returnflag",
-          targets, Criterion.Entropy, binEdges = edges)
-      case "exact_before" | "binned_before" =>
+      case "exact_before" =>
         // The r20 BEFORE shape: searchLevelWithStats's melt+cum subplan as
         // it stood at 6f198a3, reproduced from the UNCHANGED oracle-shaped
         // public functions (string-struct melt with the sentinel and the
@@ -58,8 +52,7 @@ object FitPlanDump {
         val base = df.withColumn("__node", lit(0).cast("int"))
           .where(col("__node").isNotNull)
         val hist = SplitSearch.meltedHistogram(base, features, "l_returnflag",
-          targets, if (mode == "binned_before") edges else Map.empty,
-          withNodeSentinel = true, extraKeys = Seq("__node"))
+          targets, withNodeSentinel = true, extraKeys = Seq("__node"))
         SplitSearch.cumulativeCounts(hist, targets.size, Seq("__node", "feature"))
       case other => sys.error(s"unknown mode $other")
     }

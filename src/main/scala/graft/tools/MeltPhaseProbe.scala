@@ -40,11 +40,11 @@ object MeltPhaseProbe {
     for (run <- 1 to 2) {
       time(s"run$run histogram only")(noop(
         SplitSearch.meltedHistogramIdx(base, features, "l_returnflag", targets,
-          Map.empty, Seq("__node"))))
+          Seq("__node"))))
       time(s"run$run hist+windowed cum")(noop(
         SplitSearch.cumulativeCounts(
           SplitSearch.meltedHistogramIdx(base, features, "l_returnflag", targets,
-            Map.empty, Seq("__node")), targets.size, Seq("__node", "feature"))))
+            Seq("__node")), targets.size, Seq("__node", "feature"))))
       time(s"run$run winners windowed")(noop(
         SplitSearch.searchLevelFrame(df, lit(0), features, "l_returnflag",
           targets, Criterion.Entropy)))

@@ -66,33 +66,6 @@ object WideScalingProbe {
       runScalable(186, 0.02)
       runScalable(92, 0.1)
       runScalable(44, 0.1)
-    } else if (args.lift(1).contains("pipeline32")) {
-      // r20 verdict #6 candidate: the melted-histogram PIPELINE path at
-      // width with the per-feature sampled candidate set (maxBins GK
-      // edges; counts at the sampled candidates stay exact) — the
-      // windows are bounded at 33 rows/feature so the only width-scaled
-      // cost is the melt itself. Same tree as the aggregated bins32
-      // path (WideScalableFitSpec differential).
-      def runPipelineBinned(nDerived: Int, fraction: Double): Unit = {
-        val wide = WideFrame.frame(spark, sfDir, nDerived,
-          repartitionTo = Some(cpus), rowFraction = fraction)
-        val t0 = System.nanoTime()
-        val model = DecisionTreeClassifier(maxDepth = Some(4),
-          criterion = Criterion.Entropy, maxBins = Some(32),
-          useAggregatedHistogram = false).fit(wide, "l_returnflag")
-        val tFit = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        graft.tree.Predict.predictMany(model, wide)
-          .write.format("noop").mode("overwrite").save()
-        val tPred = (System.nanoTime() - t1) / 1e9
-        println(f"[wideprobe] PIPELINE32 nDerived=$nDerived%4d fraction=$fraction%.2f " +
-          f"fit=$tFit%.1fs predict=$tPred%.1fs")
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
-      }
-      runPipelineBinned(20, 1.0)  // warm
-      runPipelineBinned(186, 1.0)
-      runPipelineBinned(186, 1.0)
     } else if (args.lift(1).contains("scalable")) {
       // the exact-threshold path at width: per-feature distincts are
       // inherited from the 4 base columns (affine derivations), so the

@@ -67,20 +67,6 @@ object SplitSearch {
     * candidate — a single distinct value leaves no right-hand side. */
   private val NodeSentinel = "__node__"
 
-  /** Snap a feature value to the smallest bin edge >= value (edges sorted
-    * ascending); values beyond the last edge collapse into a +Infinity
-    * catch-all bucket, which sorts last and is dropped by the
-    * "right side non-empty" rule. Counts at every edge threshold remain
-    * EXACT (v <= e  <=>  snap(v) <= e for e in edges); only the candidate
-    * set is restricted — the standard MLlib-style maxBins trade. */
-  def snapToEdges(c: Column, edges: Seq[Double]): Column = {
-    require(edges.nonEmpty, "snapToEdges needs at least one edge")
-    val sorted = edges.sorted
-    sorted.tail.foldLeft(when(c <= sorted.head, lit(sorted.head))) {
-      case (chain, e) => chain.when(c <= e, lit(e))
-    }.otherwise(lit(Double.PositiveInfinity))
-  }
-
   /** 0*log2(0) := 0 convention: the reference computes p*log2(p) then
     * `fill_nan(0.0)` (tree.py:215). Spark's `log` returns NULL (not NaN)
     * for non-positive input, so we need coalesce as well as nanvl. */
@@ -109,16 +95,11 @@ object SplitSearch {
       features: Seq[String],
       targetName: String,
       targets: Seq[Any],
-      binEdges: Map[String, Seq[Double]] = Map.empty,
       withNodeSentinel: Boolean = false,
       extraKeys: Seq[String] = Nil
   ): DataFrame = {
     val fv = features.map { f =>
-      val v = binEdges.get(f) match {
-        case Some(edges) => snapToEdges(col(f).cast(DoubleType), edges)
-        case None        => col(f).cast(DoubleType)
-      }
-      struct(lit(f).as("feature"), v.as("feature_value"))
+      struct(lit(f).as("feature"), col(f).cast(DoubleType).as("feature_value"))
     } ++ (if (withNodeSentinel)
             Seq(struct(lit(NodeSentinel).as("feature"), lit(0.0).as("feature_value")))
           else Nil)
@@ -279,97 +260,18 @@ object SplitSearch {
     * the string melt (SplitSearchSpec pins the trainer paths against the
     * oracle-shaped pipeline). The node sentinel is index `features.size` —
     * a lit(0.0) array element, never null, exactly like the string melt's
-    * sentinel struct. Null/NaN semantics are untouched: snapped features
-    * map null -> +Infinity inside [[snapToEdges]] (same expression), raw
-    * features keep nulls and the post-explode null filter drops them.
+    * sentinel struct. Null/NaN semantics are untouched: null values
+    * survive the array build and the post-explode null filter drops them.
     */
   private[graft] def meltedHistogramIdx(
       df: DataFrame,
       features: Seq[String],
       targetName: String,
       targets: Seq[Any],
-      binEdges: Map[String, Seq[Double]],
       extraKeys: Seq[String]
   ): DataFrame = {
-    // Fully binned frames take the FUSED melt+histogram aggregate (r21):
-    // the posexplode of rows x (F+1) melted tuples — and the boxed snap
-    // array feeding it — never materializes; one flat-counter aggregate
-    // per node emits the identical observed cells for `inline` to
-    // explode (see [[graft.functions.PackedHistogramCells]] for the
-    // allocation-rate mechanism the r20 driver record exposed at 32
-    // cores). A +Inf edge would collide with the overflow cell the
-    // melt's group-by kept separate-then-merged, so (never produced by
-    // the quantile sketch) it falls back to the exploded formulation.
-    val fusible = features.nonEmpty && features.forall(f =>
-      binEdges.get(f).exists(es =>
-        es.nonEmpty && es.forall(e => java.lang.Double.isFinite(e))))
-    if (fusible) meltedHistogramIdxFused(df, features, targetName, targets, binEdges, extraKeys)
-    else meltedHistogramIdxExploded(df, features, targetName, targets, binEdges, extraKeys)
-  }
-
-  /** The fused formulation: codegen-projected packed array + class index,
-    * ONE [[graft.functions.PackedHistogramCells]] aggregate per node
-    * group, `inline` of the emitted cells. Output rows identical to
-    * [[meltedHistogramIdxExploded]] (PackedHistogramCellsSpec). */
-  private[graft] def meltedHistogramIdxFused(
-      df: DataFrame,
-      features: Seq[String],
-      targetName: String,
-      targets: Seq[Any],
-      binEdges: Map[String, Seq[Double]],
-      extraKeys: Seq[String]
-  ): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val raw = array((features.map(f => col(f).cast(DoubleType)) :+
+    val packed = array((features.map(f => col(f).cast(DoubleType)) :+
       lit(0.0)): _*) // node sentinel at index features.size
-    val classIdx = targets.zipWithIndex.foldLeft(when(lit(false), lit(-1))) {
-      case (chain, (v, i)) => chain.when(col(targetName) === lit(v), lit(i))
-    }.otherwise(lit(-1)).cast("int")
-    // Pre-project through whole-stage codegen so the aggregate's update
-    // reads two bound attributes (primitive array + int) per row instead
-    // of interpreting the 191-element CreateArray per row (interpreted
-    // eval boxes every element — the same allocation rate the fusion is
-    // here to remove).
-    val pre = df.select((extraKeys.map(col) :+ raw.as("__arr") :+ classIdx.as("__cls")): _*)
-    // sentinel slot: one edge at its constant 0.0 value — every row lands
-    // on that edge, reproducing the melt's single sentinel cell
-    val edgeRows = features.map(f => binEdges(f).sorted) :+ Seq(0.0)
-    val agg = graft.functions.PackedHistogramCells(
-      ColumnBridge.expression(col("__arr")),
-      ColumnBridge.expression(col("__cls")), edgeRows, targets.size)
-    pre.groupBy(extraKeys.map(col): _*)
-      .agg(ColumnBridge.column(agg.toAggregateExpression()).as("__cells"))
-      .select((extraKeys.map(col) :+ inline(col("__cells"))): _*)
-  }
-
-  /** The exploded (posexplode + hash aggregate) formulation — the general
-    * path for exact/mixed candidate sets, and the model the fused
-    * aggregate is differentially pinned against. */
-  private[graft] def meltedHistogramIdxExploded(
-      df: DataFrame,
-      features: Seq[String],
-      targetName: String,
-      targets: Seq[Any],
-      binEdges: Map[String, Seq[Double]],
-      extraKeys: Seq[String]
-  ): DataFrame = {
-    val raw = array((features.map(f => col(f).cast(DoubleType)) :+
-      lit(0.0)): _*) // node sentinel at index features.size
-    // Binned features snap BEFORE the explode, as one native binary-search
-    // expression over the whole packed array ([[graft.functions
-    // .SnapArrayToEdges]]) instead of one per-feature when-chain — at 190
-    // features x 32 edges the chain was ~6,000 branch expressions per
-    // level (O(F x B) per row, and a plan Catalyst re-analyzes per
-    // level); the expression is one plan node at O(F log B) per row.
-    // Identity on the sentinel slot and on features without edges.
-    val packed =
-      if (binEdges.isEmpty) raw
-      else {
-        import org.apache.spark.sql.graft.ColumnBridge
-        val edgeRows = features.map(f => binEdges.getOrElse(f, Nil)) :+ Nil
-        ColumnBridge.column(graft.functions.SnapArrayToEdges(
-          ColumnBridge.expression(raw), edgeRows))
-      }
     val keyed = extraKeys.map(col)
     val melted = df
       .select((keyed :+ col(targetName).as("__target") :+
@@ -471,10 +373,6 @@ object SplitSearch {
     *
     * Replaces the reference's ~3 executions per node (collect_all fan-out +
     * mask collect + distribution collect, tree.py:339-372) with one.
-    *
-    * `binEdges`: optional per-feature quantile-bin edges (maxBins mode) —
-    * bounds every per-feature window partition at |edges|+1 rows, which is
-    * what makes the cumulative windows scale-safe on continuous features.
     */
   def searchWithStats(
       df: DataFrame,
@@ -482,12 +380,11 @@ object SplitSearch {
       targetName: String,
       targets: Seq[Any],
       criterion: Criterion,
-      binEdges: Map[String, Seq[Double]] = Map.empty,
       cumBuckets: Option[Int] = None,
       cumRanges: Map[String, (Double, Double)] = Map.empty
   ): NodeSearch =
     searchLevelWithStats(df, lit(0), features, targetName, targets, criterion,
-      binEdges, cumBuckets, cumRanges)
+      cumBuckets, cumRanges)
       .getOrElse(0, throw new IllegalArgumentException(
         "searchWithStats on empty input data (no rows reached the search)"))
 
@@ -505,13 +402,12 @@ object SplitSearch {
       targetName: String,
       targets: Seq[Any],
       criterion: Criterion,
-      binEdges: Map[String, Seq[Double]] = Map.empty,
       cumBuckets: Option[Int] = None,
       cumRanges: Map[String, (Double, Double)] = Map.empty
   ): Map[Int, NodeSearch] = {
     val k = targets.size
     val winners = searchLevelFrame(df, nodeId, features, targetName, targets,
-      criterion, binEdges, cumBuckets, cumRanges).collect()
+      criterion, cumBuckets, cumRanges).collect()
 
     val sentinelIdx = features.size
     winners.toSeq.groupBy(_.getAs[Int]("__node")).map { case (node, rows) =>
@@ -546,13 +442,12 @@ object SplitSearch {
       targetName: String,
       targets: Seq[Any],
       criterion: Criterion,
-      binEdges: Map[String, Seq[Double]] = Map.empty,
       cumBuckets: Option[Int] = None,
       cumRanges: Map[String, (Double, Double)] = Map.empty
   ): DataFrame = {
     val k = targets.size
     val base = df.withColumn("__node", nodeId.cast("int")).where(col("__node").isNotNull)
-    val hist = meltedHistogramIdx(base, features, targetName, targets, binEdges,
+    val hist = meltedHistogramIdx(base, features, targetName, targets,
       extraKeys = Seq("__node"))
     // index-keyed ranges for the bucket chain (the sentinel index is absent
     // from the map and collapses into the last bucket, same as the string
@@ -619,28 +514,19 @@ object SplitSearch {
       .select(col("__node"), col("feature"), col("w.p.*"))
   }
 
-  /** Binned-mode fast path: ONE [[graft.functions.MultiFeatureHistogram]]
-    * aggregate job (no melt — a single pass over un-exploded rows, buffer
-    * = (F+1) x (B+1) x K longs merged to one row) and the entire gain
-    * computation on the driver. Requires bin edges for every feature and
-    * non-null targets; candidate set, counts, tie-breaks, and float
-    * association order mirror the DataFrame pipeline exactly (equality is
-    * asserted in SplitSearchSpec).
-    */
-  def searchWithStatsAggregated(
-      df: DataFrame,
-      features: Seq[String],
-      targetName: String,
-      targets: Seq[Any],
-      criterion: Criterion,
-      binEdges: Map[String, Seq[Double]]
-  ): NodeSearch =
-    searchLevelAggregated(df, lit(0), 1, features, targetName, targets, criterion, binEdges)(0)
-
-  /** Level-wise twin of [[searchWithStatsAggregated]]: one
-    * [[graft.functions.MultiFeatureHistogram]] job per tree LEVEL (the
-    * aggregate buffer carries a node dimension), gain math on the driver.
-    * Nodes with no rows are absent from the result map. */
+  /** The binned-mode level search (`maxBins` set): ONE
+    * [[graft.functions.MultiFeatureHistogram]] aggregate job per tree LEVEL
+    * — no melt, a single pass over un-exploded rows, buffer =
+    * nodes x (F+1) x (B+1) x K longs merged to one row — and the gain math
+    * on the driver. Every row counts under the bin of the smallest edge
+    * >= its value (values past the last edge and NaN in the +inf bin), so
+    * the counts at each edge are exact; rows with a null feature value
+    * skip that feature only, and rows with a null or unknown target count
+    * nowhere. Candidates, counts, tie-breaks and float association order
+    * match [[searchLevelWithStats]] run over the values snapped to their
+    * edges (MultiFeatureHistogramSpec). Features without edges (all-null
+    * or all-NaN columns) are not searched. Nodes with no rows are absent
+    * from the result map. */
   def searchLevelAggregated(
       df: DataFrame,
       nodeId: Column,
@@ -675,8 +561,7 @@ object SplitSearch {
       .select(ColumnBridge.column(agg.toAggregateExpression()).as("hist"))
       .head().getSeq[Long](0)
 
-    val numBins = edges.map(_.size).max + 1
-    val block = numBins * k
+    val block = agg.numBins * k
     val nodeLen = (feats.size + 1) * block
     (0 until numNodes).flatMap { node =>
       def cell(f: Int, b: Int, c: Int): Long = buffer(node * nodeLen + f * block + b * k + c)

@@ -8,11 +8,19 @@ import org.apache.spark.storage.StorageLevel
   * DataFrame dataflow — the Spark-native rebuild of the reference's
   * Polars-backed `DecisionTreeClassifier` (reference: efficient_trees/tree.py:16-385).
   *
-  * Execution shape per tree node: ONE Spark job
-  * ([[SplitSearch.searchWithStats]]) that returns every feature's best
-  * split AND the node's class distribution; the children's distributions
-  * fall out of the winner's cumulative counts, so leaves cost zero jobs.
-  * The reference runs ~3 executions per node (per-feature `collect_all`
+  * The tree grows level by level: ONE Spark job per tree LEVEL answers
+  * every pending node of that level at once — its class distribution and
+  * every feature's best split. Rows reach their pending node through an
+  * id expression over the partial tree, so the children's distributions
+  * fall out of the winner's cumulative counts and leaves cost zero jobs.
+  * Which job runs depends only on `maxBins`:
+  *   - exact mode (`maxBins = None`): [[SplitSearch.searchLevelWithStats]],
+  *     the reference's melt -> histogram -> cumulative counts -> gain
+  *     dataflow, keyed by node;
+  *   - binned mode: [[SplitSearch.searchLevelAggregated]], one
+  *     [[graft.functions.MultiFeatureHistogram]] aggregate over the
+  *     un-melted rows with the gain math on the driver.
+  * The reference runs ~3 executions per NODE (per-feature `collect_all`
   * fan-out + mask collect + distribution collect, tree.py:339-372).
   *
   * @param maxDepth       depth cap; at `depth >= maxDepth` a majority-class
@@ -36,45 +44,32 @@ import org.apache.spark.storage.StorageLevel
   * @param criterion      entropy or gini (reference: enums.py:8-14)
   * @param maxBins        when set, candidate thresholds per feature are
   *                       restricted to `maxBins` approximate quantile edges
-  *                       computed ONCE on the training data (MLlib-style).
-  *                       This bounds the per-feature cumulative-count window
-  *                       partition at maxBins+1 rows — the scale-safe mode
-  *                       for continuous features, where exact mode's
-  *                       candidate set (every distinct value) would put O(n)
-  *                       rows in a single window task. Counts at the chosen
-  *                       edges stay exact; only the candidate set shrinks.
-  *                       None = exact mode (reference parity, golden tests).
-  * @param exactCumulativePartitions exact mode's other scale lever: when
-  *                       set, the cumulative class counts use the
-  *                       declarative bucketed prefix sum
+  *                       computed ONCE on the training data (MLlib-style),
+  *                       and every level runs the binned aggregate above.
+  *                       Counts at the chosen edges stay exact; only the
+  *                       candidate set shrinks — the scale-safe mode for
+  *                       continuous features, where exact mode's candidate
+  *                       set is every distinct value. None = exact mode
+  *                       (reference parity, golden tests).
+  * @param exactCumulativePartitions exact mode's scale lever: when set, the
+  *                       cumulative class counts use the declarative
+  *                       bucketed prefix sum
   *                       ([[SplitSearch.cumulativeCountsPartitioned]])
   *                       instead of one window task per feature — same
   *                       results, bounded window partitions, still one
   *                       query per level (two tiny broadcast side
-  *                       aggregates, no checkpoint). Ignored when maxBins
-  *                       already bounds the windows.
-  * @param useAggregatedHistogram binned mode's fast path (default on): the
-  *                       single-pass [[graft.functions.MultiFeatureHistogram]]
-  *                       aggregate replaces the melt + window pipeline —
-  *                       no (#features+1)x row explosion, one tiny-row
-  *                       merge instead of a histogram shuffle, gain math
-  *                       on the driver. Same splits; stored gain metadata
-  *                       can differ in the last ulp vs the pipeline path.
-  * @param cacheNodes     persist each node's rows (MEMORY_AND_DISK) for the
-  *                       duration of its subtree build. The reference's
+  *                       aggregates, no checkpoint). Ignored in binned mode,
+  *                       which has no windows.
+  * @param cacheNodes     persist the training rows (MEMORY_AND_DISK) for
+  *                       the duration of the fit, so each level job reads
+  *                       the cache instead of the source. The reference's
   *                       lazy/streaming mode re-derives every node from the
-  *                       root scan through the stacked filters instead
-  *                       (tree.py:233-234, SURVEY.md §3 EP1) — set false to
-  *                       reproduce that recompute-everything behavior (lower
-  *                       memory, more scans). On a cluster, cached node data
-  *                       spills to executor-local disk, so this is the
+  *                       root scan instead (tree.py:233-234, SURVEY.md §3
+  *                       EP1) — set false to reproduce that (lower memory,
+  *                       one source scan per level). On a cluster, cached
+  *                       data spills to executor-local disk, so this is the
   *                       out-of-core analogue of the reference's streaming
-  *                       engine, with strictly fewer input rescans.
-  * @param checkpointDepthInterval every this-many levels, truncate plan
-  *                       lineage with `localCheckpoint` — stacked filters
-  *                       grow the logical plan linearly with depth and
-  *                       Catalyst analysis cost superlinearly
-  *                       (SURVEY.md §7 hard-part 2). 0 disables.
+  *                       engine.
   */
 final case class DecisionTreeClassifier(
     maxDepth: Option[Int] = None,
@@ -83,39 +78,27 @@ final case class DecisionTreeClassifier(
     criterion: Criterion = Criterion.Entropy,
     maxBins: Option[Int] = None,
     exactCumulativePartitions: Option[Int] = None,
-    useAggregatedHistogram: Boolean = true,
-    levelWise: Boolean = true,
-    cacheNodes: Boolean = true,
-    checkpointDepthInterval: Int = 0
+    cacheNodes: Boolean = true
 ) {
-
-  /** Level-wise construction state: the partially built tree, where
-    * [[BPending]] marks nodes whose split is still to be decided. Pending
-    * ids are (re)assigned every level in pre-order, matching the order the
-    * nodeId expression emits them. */
-  private sealed trait Building
-  private final case class BSplit(feature: String, threshold: Double, gain: Double,
-      crit: Double, dist: Seq[Long], left: Building, right: Building) extends Building
-  private final case class BLeaf(value: Any) extends Building
-  private final case class BPending(inherited: Option[Seq[Long]]) extends Building
+  import DecisionTreeClassifier._
 
   /** Train. Pipeline mirrors the reference's `fit` (tree.py:79-115):
     * schema introspection -> (dtype shrink: a no-op under Tungsten) ->
     * target-encode categoricals -> collect distinct targets ->
     * (maxBins mode: one approxQuantile pass for bin edges) ->
-    * recursive build.
+    * level-wise build.
     */
   def fit(data: DataFrame, targetName: String): DecisionTreeModel = {
     val featureNames = data.schema.fieldNames.filterNot(_ == targetName).toSeq
     val targetType = data.schema(targetName).dataType
 
     // NULL targets are excluded up front: `=== lit(null)` never matches, so
-    // a null class could never accrue histogram counts — the pipeline path
-    // would still count those rows in count_examples while the aggregated
-    // path dropped them (different trees per useAggregatedHistogram), and an
-    // all-null node would throw "majority of empty node". One filter makes
-    // every path see identical data. (The reference never defines null-target
-    // behavior; its examples fill_null before fit — amex_default.py:23.)
+    // a null class could never accrue histogram counts — the exact path
+    // would still count those rows in count_examples while the binned
+    // aggregate drops them, and an all-null node would throw "majority of
+    // empty node". One filter makes both modes see identical data. (The
+    // reference never defines null-target behavior; its examples fill_null
+    // before fit — amex_default.py:23.)
     val nonNullTarget = data.where(col(targetName).isNotNull)
 
     val (encoded0, mappings) =
@@ -161,33 +144,10 @@ final case class DecisionTreeClassifier(
     // ignored throughout: a NaN never blocks shrink (NaN survives the
     // f32 cast value-preserved), unlike a max(abs) aggregate where NaN
     // would poison the comparison.
-    val (encoded: DataFrame, binEdges: Map[String, Seq[Double]]) = maxBins match {
+    val (encoded: DataFrame, binEdges: Option[Map[String, Seq[Double]]]) = maxBins match {
       case Some(b) =>
-        require(b >= 2, s"maxBins must be >= 2, got $b")
-        import org.apache.spark.sql.graft.ColumnBridge
-        val probs = 0.0 +: (1 until b).map(_.toDouble / b) :+ 1.0
-        val packed = array(featureNames.map(f => col(f).cast("double")): _*)
-        val agg = graft.functions.MultiQuantileSketch(
-          ColumnBridge.expression(col("__arr")), featureNames.size, 1.0 / (4 * b), probs)
-        // Pre-project the packed array through whole-stage codegen (r21):
-        // an imperative aggregate evaluates its child expressions with
-        // interpreted eval per row, so the bare CreateArray boxed every
-        // feature of every row (at 190 features the boxing dominated the
-        // pass and its garbage drove the 32-core page-churn pathology the
-        // r20 scaling block exposed). A bound attribute read is free.
-        val quantiles: Seq[Seq[Double]] = encoded0
-          .select(packed.as("__arr"))
-          .select(ColumnBridge.column(agg.toAggregateExpression()).as("qs"))
-          .head().getSeq[scala.collection.Seq[Double]](0).map(_.toSeq)
-        val absMax: Map[String, Double] = featureNames.zip(quantiles).collect {
-          case (f, qs) if qs.nonEmpty =>
-            f -> math.max(math.abs(qs.head), math.abs(qs.last))
-        }.toMap
-        val edges = featureNames
-          .zip(quantiles.map(qs =>
-            if (qs.isEmpty) qs else qs.drop(1).dropRight(1).distinct.sorted))
-          .filter(_._2.nonEmpty).toMap
-        (shrinkWith(absMax.get), edges)
+        val (edges, absMax) = quantileBins(encoded0, featureNames, b)
+        (shrinkWith(absMax.get), Some(edges))
       case None =>
         val maxAbs: Map[String, Double] =
           if (shrinkDtype && doubleFeatures.nonEmpty) {
@@ -197,7 +157,7 @@ final case class DecisionTreeClassifier(
               Option(r.getAs[Any](s"__ma_$f")).map { case m: Double => f -> m }
             }.toMap
           } else Map.empty
-        (shrinkWith(maxAbs.get), Map.empty[String, Seq[Double]])
+        (shrinkWith(maxAbs.get), None)
     }
 
     // Distinct target values (tree.py:110-113). The reference's order is
@@ -224,12 +184,7 @@ final case class DecisionTreeClassifier(
         }.toMap
       } else Map.empty
 
-    val tree =
-      if (levelWise)
-        buildTreeLevelWise(encoded, featureNames, targetName, targets, binEdges, cumRanges)
-      else
-        buildTree(encoded, featureNames, targetName, targets, binEdges, cumRanges,
-          depth = 0, inheritedDist = None)
+    val tree = buildTreeLevelWise(encoded, featureNames, targetName, targets, binEdges, cumRanges)
     DecisionTreeModel(tree, mappings, targetType)
   }
 
@@ -241,18 +196,18 @@ final case class DecisionTreeClassifier(
     * mode) that answers every pending node at once — rows are routed to
     * their pending node by a when-chain id expression over the partial
     * tree. Jobs per tree = depth, not node count; the source is cached
-    * once instead of per node. Identical trees to the depth-first builder
-    * (node membership and per-node math are the same; asserted in
-    * SplitSearchSpec). The id when-chain has one branch per node at the
-    * current frontier, so keep depth <= ~12 (the reference's own examples
-    * cap at 4-8).
+    * once. Same trees as the reference's depth-first recursion (node
+    * membership and per-node math are the same; asserted against the
+    * test-side RefTree in SplitSearchSpec and TreeSpec). The id when-chain
+    * has one branch per node at the current frontier, so keep depth <= ~12
+    * (the reference's own examples cap at 4-8).
     */
   private def buildTreeLevelWise(
       data: DataFrame,
       featureNames: Seq[String],
       targetName: String,
       targets: Seq[Any],
-      binEdges: Map[String, Seq[Double]],
+      binEdges: Option[Map[String, Seq[Double]]],
       cumRanges: Map[String, (Double, Double)]
   ): TreeNode = {
     val source = if (cacheNodes) data.persist(StorageLevel.MEMORY_AND_DISK) else data
@@ -265,7 +220,8 @@ final case class DecisionTreeClassifier(
 
     /** Pre-order pending-node id routing expression over the partial tree.
       * NULL id = row sits in a finalized leaf or drops out at a NULL split
-      * feature (3-valued logic — same as the recursive builder's filters). */
+      * feature (3-valued logic — the reference's mask/~mask split,
+      * tree.py:351-358). */
     def idExpr(b: Building): org.apache.spark.sql.Column = {
       var idx = -1
       def walk(n: Building): org.apache.spark.sql.Column = n match {
@@ -315,14 +271,15 @@ final case class DecisionTreeClassifier(
         } else {
           val numPendings = countPendings(tree)
           val nodeId = idExpr(tree)
-          val results: Map[Int, SplitSearch.NodeSearch] =
-            if (binEdges.nonEmpty && useAggregatedHistogram)
+          val results: Map[Int, SplitSearch.NodeSearch] = binEdges match {
+            case Some(edges) =>
               SplitSearch.searchLevelAggregated(source, nodeId, numPendings,
-                featureNames, targetName, targets, criterion, binEdges)
-            else
+                featureNames, targetName, targets, criterion, edges)
+            case None =>
               SplitSearch.searchLevelWithStats(source, nodeId,
-                featureNames, targetName, targets, criterion, binEdges,
-                if (binEdges.isEmpty) exactCumulativePartitions else None, cumRanges)
+                featureNames, targetName, targets, criterion,
+                exactCumulativePartitions, cumRanges)
+          }
           var idx = -1
           def rebuild(b: Building): Building = b match {
             case s: BSplit => s.copy(left = rebuild(s.left), right = rebuild(s.right))
@@ -370,70 +327,57 @@ final case class DecisionTreeClassifier(
     targets(dist.indexOf(dist.max))
   }
 
-  /** Fallback single job for the rare no-inherited-distribution case
+  /** Fallback single job for the one no-inherited-distribution case
     * (depth cap at the root). */
   private def distributionJob(df: DataFrame, targetName: String, targets: Seq[Any]): Seq[Long] = {
     val counts = df.groupBy(col(targetName)).agg(count(lit(1)).as("n"))
       .collect().map(r => r.get(0) -> r.getAs[Long]("n")).toMap
     targets.map(t => counts.getOrElse(t, 0L))
   }
+}
 
-  /** Recursive node build (reference: tree.py:180-385). */
-  private def buildTree(
+object DecisionTreeClassifier {
+
+  /** Level-wise construction state: the partially built tree, where
+    * [[BPending]] marks nodes whose split is still to be decided. Pending
+    * ids are (re)assigned every level in pre-order, matching the order the
+    * nodeId expression emits them. */
+  private sealed trait Building
+  private final case class BSplit(feature: String, threshold: Double, gain: Double,
+      crit: Double, dist: Seq[Long], left: Building, right: Building) extends Building
+  private final case class BLeaf(value: Any) extends Building
+  private final case class BPending(inherited: Option[Seq[Long]]) extends Building
+
+  /** The `maxBins` quantile pass over `data`'s `features`: ONE
+    * MultiQuantileSketch aggregate returns, per feature, its bin edges
+    * (the interior quantiles, distinct and sorted) and its max |value|
+    * (from the exact extremes). Features with no valid values (all null or
+    * NaN) appear in neither map. */
+  private[graft] def quantileBins(
       data: DataFrame,
-      featureNames: Seq[String],
-      targetName: String,
-      targets: Seq[Any],
-      binEdges: Map[String, Seq[Double]],
-      cumRanges: Map[String, (Double, Double)],
-      depth: Int,
-      inheritedDist: Option[Seq[Long]]
-  ): TreeNode = {
-    if (maxDepth.exists(depth >= _)) {
-      // Depth-capped leaf: zero Spark jobs when the parent handed us the
-      // distribution (always, except a root-level cap).
-      val dist = inheritedDist.getOrElse(distributionJob(data, targetName, targets))
-      return LeafNode(majorityFromDist(dist, targets))
-    }
-
-    val node = {
-      val checkpointed =
-        if (checkpointDepthInterval > 0 && depth > 0 && depth % checkpointDepthInterval == 0)
-          data.localCheckpoint(eager = false)
-        else data
-      if (cacheNodes) checkpointed.persist(StorageLevel.MEMORY_AND_DISK) else checkpointed
-    }
-    try {
-      // Binned mode takes the single-pass aggregate fast path (no melt,
-      // driver-side gain math); exact mode runs the DataFrame pipeline.
-      val search =
-        if (binEdges.nonEmpty && useAggregatedHistogram)
-          SplitSearch.searchWithStatsAggregated(
-            node, featureNames, targetName, targets, criterion, binEdges)
-        else
-          SplitSearch.searchWithStats(
-            node, featureNames, targetName, targets, criterion, binEdges,
-            if (binEdges.isEmpty) exactCumulativePartitions else None, cumRanges)
-      search.best match {
-        case Some(cs) if cs.candidate.informationGain > 0 =>
-          val c = cs.candidate
-          // Split by re-applying the predicate on each side — same 3-valued
-          // semantics as the reference's materialized mask + ~mask
-          // (tree.py:351-358): NULL-feature rows leave both children.
-          val pred = col(c.feature).cast("double") <= lit(c.threshold)
-          val leftDist = cs.leftClassCounts
-          val rightDist = cs.featureClassTotals.zip(cs.leftClassCounts).map { case (t, l) => t - l }
-          val left = buildTree(node.where(pred), featureNames, targetName, targets,
-            binEdges, cumRanges, depth + 1, Some(leftDist))
-          val right = buildTree(node.where(!pred), featureNames, targetName, targets,
-            binEdges, cumRanges, depth + 1, Some(rightDist))
-          SplitNode(c.feature, c.threshold, c.informationGain, c.parentCriterion,
-            search.nodeDistribution, left, right)
-        case _ =>
-          LeafNode(majorityFromDist(search.nodeDistribution, targets))
-      }
-    } finally {
-      if (cacheNodes) node.unpersist(blocking = false)
-    }
+      features: Seq[String],
+      maxBins: Int
+  ): (Map[String, Seq[Double]], Map[String, Double]) = {
+    require(maxBins >= 2, s"maxBins must be >= 2, got $maxBins")
+    import org.apache.spark.sql.graft.ColumnBridge
+    val probs = 0.0 +: (1 until maxBins).map(_.toDouble / maxBins) :+ 1.0
+    val packed = array(features.map(f => col(f).cast("double")): _*)
+    val agg = graft.functions.MultiQuantileSketch(
+      ColumnBridge.expression(col("__arr")), features.size, 1.0 / (4 * maxBins), probs)
+    // Pre-project the packed array through whole-stage codegen (r21):
+    // an imperative aggregate evaluates its child expressions with
+    // interpreted eval per row, so the bare CreateArray boxed every
+    // feature of every row (at 190 features the boxing dominated the
+    // pass and its garbage drove the 32-core page-churn pathology the
+    // r20 scaling block exposed). A bound attribute read is free.
+    val quantiles: Seq[Seq[Double]] = data
+      .select(packed.as("__arr"))
+      .select(ColumnBridge.column(agg.toAggregateExpression()).as("qs"))
+      .head().getSeq[scala.collection.Seq[Double]](0).map(_.toSeq)
+    val valid = features.zip(quantiles).filter(_._2.nonEmpty)
+    val edges = valid.map { case (f, qs) => f -> qs.drop(1).dropRight(1).distinct.sorted }
+      .filter(_._2.nonEmpty).toMap
+    val absMax = valid.map { case (f, qs) => f -> math.max(math.abs(qs.head), math.abs(qs.last)) }.toMap
+    (edges, absMax)
   }
 }

@@ -1,13 +1,15 @@
 package graft.tree
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** Hand-computed split-search values on a tiny fixture, plus agreement
-  * between the oracle-shaped pipeline and the trainer's single-job path. */
+/** Hand-computed split-search values on a tiny fixture, agreement between
+  * the oracle-shaped pipeline and the trainer's level searches, and the
+  * trainer against the test-side RefTree. */
 class SplitSearchSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -94,9 +96,24 @@ class SplitSearchSpec extends AnyFunSuite {
     assert(a.tree == b.tree)
   }
 
+  private def lineitem(features: Seq[String]) =
+    spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+      .select((features :+ "l_returnflag").map(col): _*)
+
+  /** A seeded 1/6 row sample of sf0.001 lineitem: RefTree scans every row
+    * for every candidate threshold, which is too slow on the ~6k distinct
+    * l_extendedprice values of the full set. */
+  private def lineitemSample(features: Seq[String]) = {
+    val rows = lineitem(features).sample(1.0 / 6, 11L).collect().toSeq
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), lineitem(features).schema)
+  }
+
+  private val liFeatures = Seq("l_quantity", "l_discount", "l_tax", "l_extendedprice")
+
   test("aggregated single-pass histogram search matches the DataFrame pipeline") {
-    val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    val features = Seq("l_quantity", "l_discount", "l_tax", "l_extendedprice")
+    // the binned aggregate over raw values == the exact pipeline over the
+    // values snapped to the same edges
+    val li = lineitem(liFeatures)
     val targets = Seq[Any]("A", "N", "R")
     val edges = Map(
       "l_quantity" -> Seq(10.0, 20.0, 30.0, 40.0),
@@ -105,9 +122,9 @@ class SplitSearchSpec extends AnyFunSuite {
       "l_extendedprice" -> Seq(10000.0, 30000.0, 60000.0, 90000.0))
     for (crit <- Seq(Criterion.Entropy, Criterion.Gini)) {
       val viaPipeline = SplitSearch.searchWithStats(
-        li, features, "l_returnflag", targets, crit, edges)
-      val viaAggregate = SplitSearch.searchWithStatsAggregated(
-        li, features, "l_returnflag", targets, crit, edges)
+        BinnedRef.snapped(li, edges), liFeatures, "l_returnflag", targets, crit)
+      val viaAggregate = SplitSearch.searchLevelAggregated(
+        li, lit(0), 1, liFeatures, "l_returnflag", targets, crit, edges)(0)
       assert(viaAggregate.nodeDistribution == viaPipeline.nodeDistribution)
       val p = viaPipeline.candidates.map(c => c.candidate.feature -> c).toMap
       val a = viaAggregate.candidates.map(c => c.candidate.feature -> c).toMap
@@ -124,94 +141,109 @@ class SplitSearchSpec extends AnyFunSuite {
   }
 
   test("aggregated and pipeline binned trainers build the same tree") {
-    val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-      .select("l_quantity", "l_discount", "l_tax", "l_extendedprice", "l_returnflag")
-    val fast = DecisionTreeClassifier(maxDepth = Some(3), maxBins = Some(16)).fit(li, "l_returnflag")
-    val slow = DecisionTreeClassifier(maxDepth = Some(3), maxBins = Some(16),
-      useAggregatedHistogram = false).fit(li, "l_returnflag")
-    // identical structure/thresholds/distributions; stored gain metadata
-    // may differ in the last ulp between the column-expression and
-    // driver-side float paths
-    def same(a: TreeNode, b: TreeNode): Boolean = (a, b) match {
-      case (LeafNode(x), LeafNode(y)) => x == y
-      case (SplitNode(f1, t1, g1, c1, d1, l1, r1), SplitNode(f2, t2, g2, c2, d2, l2, r2)) =>
-        f1 == f2 && t1 == t2 && d1 == d2 &&
-          math.abs(g1 - g2) < 1e-12 && math.abs(c1 - c2) < 1e-12 &&
-          same(l1, l2) && same(r1, r2)
-      case _ => false
-    }
-    assert(same(fast.tree, slow.tree), s"\nfast: ${fast.tree}\nslow: ${slow.tree}")
+    // binned fit == exact (pipeline) fit over the frame snapped to the
+    // fit's own quantile edges
+    val li = lineitem(liFeatures)
+    val (edges, _) = DecisionTreeClassifier.quantileBins(li, liFeatures, 16)
+    val binned = DecisionTreeClassifier(maxDepth = Some(3), maxBins = Some(16), shrinkDtype = false)
+      .fit(li, "l_returnflag")
+    val pipeline = DecisionTreeClassifier(maxDepth = Some(3), shrinkDtype = false)
+      .fit(BinnedRef.snapped(li, edges), "l_returnflag")
+    assert(BinnedRef.sameTree(binned.tree, pipeline.tree, 1e-12),
+      s"\nbinned: ${binned.tree}\npipeline: ${pipeline.tree}")
   }
 
+  // The depth-first side of the three tests below is RefTree, the
+  // test-side recursive trainer (tree.py:180-385 semantics).
+
   test("level-wise trainer builds the identical tree to the depth-first trainer") {
-    val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-      .select("l_quantity", "l_discount", "l_tax", "l_extendedprice", "l_returnflag")
+    val li = lineitemSample(liFeatures)
+    // mirror the default shrinkDtype fit projection (f32 grid)
+    val (rows, ys) = BinnedRef.refRows(li, liFeatures, "l_returnflag")
+    val f32 = rows.map(_.map { case (f, v) => f -> v.map(_.toFloat.toDouble) })
     for (crit <- Seq(Criterion.Entropy, Criterion.Gini)) {
       val level = DecisionTreeClassifier(maxDepth = Some(3), criterion = crit)
         .fit(li, "l_returnflag")
-      val depthFirst = DecisionTreeClassifier(maxDepth = Some(3), criterion = crit,
-        levelWise = false).fit(li, "l_returnflag")
-      assert(level.tree == depthFirst.tree, s"${crit.name} trees differ")
+      val depthFirst = RefTree.fit(f32, ys, liFeatures, crit, maxDepth = 3)
+      assert(BinnedRef.sameTree(level.tree, depthFirst.tree),
+        s"${crit.name} trees differ\nlevel: ${level.tree}\nref: ${depthFirst.tree}")
     }
   }
 
   test("level-wise binned (aggregated) trainer matches depth-first binned pipeline") {
-    val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-      .select("l_quantity", "l_discount", "l_tax", "l_extendedprice", "l_returnflag")
-    val level = DecisionTreeClassifier(maxDepth = Some(3), maxBins = Some(16))
+    val li = lineitem(liFeatures)
+    val (edges, _) = DecisionTreeClassifier.quantileBins(li, liFeatures, 16)
+    val level = DecisionTreeClassifier(maxDepth = Some(3), maxBins = Some(16), shrinkDtype = false)
       .fit(li, "l_returnflag")
-    val depthFirst = DecisionTreeClassifier(maxDepth = Some(3), maxBins = Some(16),
-      levelWise = false, useAggregatedHistogram = false).fit(li, "l_returnflag")
-    def same(a: TreeNode, b: TreeNode): Boolean = (a, b) match {
-      case (LeafNode(x), LeafNode(y)) => x == y
-      case (SplitNode(f1, t1, g1, _, d1, l1, r1), SplitNode(f2, t2, g2, _, d2, l2, r2)) =>
-        f1 == f2 && t1 == t2 && d1 == d2 && math.abs(g1 - g2) < 1e-12 &&
-          same(l1, l2) && same(r1, r2)
-      case _ => false
+    val (rows, ys) = BinnedRef.refRows(BinnedRef.snapped(li, edges), liFeatures, "l_returnflag")
+    val depthFirst = RefTree.fit(rows, ys, liFeatures, Criterion.Entropy, maxDepth = 3)
+    assert(BinnedRef.sameTree(level.tree, depthFirst.tree),
+      s"\nlevel: ${level.tree}\nref: ${depthFirst.tree}")
+  }
+
+  /** Two gaussian features with nulls at the given row periods. */
+  private def nullLaden(n: Int, seed: Int, nullEvery1: Int, nullEvery2: Int) = {
+    val rnd = new scala.util.Random(seed)
+    val rows = (0 until n).map { i =>
+      val c = i % 2
+      Row(
+        if (i % nullEvery1 == 0) null else java.lang.Double.valueOf(c * 2.0 + rnd.nextGaussian()),
+        if (i % nullEvery2 == 0) null else java.lang.Double.valueOf(3.0 - c + rnd.nextGaussian()),
+        c)
     }
-    assert(same(level.tree, depthFirst.tree))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+      StructType(Seq(StructField("f1", DoubleType, nullable = true),
+        StructField("f2", DoubleType, nullable = true),
+        StructField("target", IntegerType))))
   }
 
   test("level-wise null routing matches depth-first on null-laden data") {
     // nulls in the split features: rows must drop out of BOTH children at
-    // the level-wise id when-chain exactly as they do in the recursive
-    // builder's filter/negated-filter pair
-    val rnd = new scala.util.Random(5)
-    val rows = (0 until 200).map { i =>
-      val c = i % 2
-      Row(
-        if (i % 7 == 0) null else java.lang.Double.valueOf(c * 2.0 + rnd.nextGaussian()),
-        if (i % 11 == 0) null else java.lang.Double.valueOf(3.0 - c + rnd.nextGaussian()),
-        c)
-    }
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
-      StructType(Seq(StructField("f1", DoubleType, nullable = true),
-        StructField("f2", DoubleType, nullable = true),
-        StructField("target", IntegerType))))
-    val level = DecisionTreeClassifier(maxDepth = Some(3)).fit(df, "target")
-    val depthFirst = DecisionTreeClassifier(maxDepth = Some(3), levelWise = false)
+    // the level-wise id when-chain exactly as they do in RefTree's
+    // recursive filter pair
+    val df = nullLaden(200, 5, 7, 11)
+    val level = DecisionTreeClassifier(maxDepth = Some(3), shrinkDtype = false).fit(df, "target")
+    val (rows, ys) = BinnedRef.refRows(df, Seq("f1", "f2"), "target")
+    val depthFirst = RefTree.fit(rows, ys, Seq("f1", "f2"), Criterion.Entropy, maxDepth = 3)
+    assert(BinnedRef.sameTree(level.tree, depthFirst.tree),
+      s"\nlevel: ${level.tree}\nref: ${depthFirst.tree}")
+  }
+
+  test("binned fit on null-laden data matches RefTree over the snapped values") {
+    // null rows drop out of a feature's counts AND of both children, in
+    // the search exactly as in the routing: f1 is null in every third row
+    val df = nullLaden(400, 3, 3, 1000)
+    val (edges, _) = DecisionTreeClassifier.quantileBins(df, Seq("f1", "f2"), 8)
+    val binned = DecisionTreeClassifier(maxDepth = Some(3), maxBins = Some(8), shrinkDtype = false)
       .fit(df, "target")
-    assert(level.tree == depthFirst.tree)
+    val (rows, ys) = BinnedRef.refRows(BinnedRef.snapped(df, edges), Seq("f1", "f2"), "target")
+    val ref = RefTree.fit(rows, ys, Seq("f1", "f2"), Criterion.Entropy, maxDepth = 3)
+    assert(rows.exists(_("f1").isEmpty))
+    assert(BinnedRef.sameTree(binned.tree, ref.tree), s"\nbinned: ${binned.tree}\nref: ${ref.tree}")
   }
 
   test("snapToEdges: exact counts at edges, +inf catch-all") {
-    import org.apache.spark.sql.functions._
     val vals = spark.range(1, 101).select((col("id").cast("double") / 10.0).as("v"))
+      .union(spark.range(1).select(lit(null).cast("double").as("v")))
     val edges = Seq(2.0, 5.0, 8.0)
-    val snapped = vals.select(SplitSearch.snapToEdges(col("v"), edges).as("s"))
-      .groupBy("s").count().collect().map(r => r.getDouble(0) -> r.getLong(1)).toMap
-    assert(snapped(2.0) == 20)  // 0.1..2.0
-    assert(snapped(5.0) == 30)  // 2.1..5.0
-    assert(snapped(8.0) == 30)  // 5.1..8.0
-    assert(snapped(Double.PositiveInfinity) == 20) // 8.1..10.0
+    val snapped = vals.select(BinnedRef.snapToEdges(col("v"), edges).as("s"))
+      .groupBy("s").count().collect()
+      .map(r => Option(r.get(0)).map(_.asInstanceOf[Double]) -> r.getLong(1)).toMap
+    assert(snapped(Some(2.0)) == 20)  // 0.1..2.0
+    assert(snapped(Some(5.0)) == 30)  // 2.1..5.0
+    assert(snapped(Some(8.0)) == 30)  // 5.1..8.0
+    assert(snapped(Some(Double.PositiveInfinity)) == 20) // 8.1..10.0
+    assert(snapped(None) == 1) // null stays null
   }
 
   test("binned search gives exact gain at a chosen edge") {
-    val search = SplitSearch.searchWithStats(df, Seq("x"), "target", Seq(0, 1),
-      Criterion.Entropy, binEdges = Map("x" -> Seq(2.0, 3.0)))
+    val search = SplitSearch.searchLevelAggregated(df, lit(0), 1, Seq("x"), "target", Seq(0, 1),
+      Criterion.Entropy, Map("x" -> Seq(2.0, 3.0)))(0)
     val exact = SplitSearch.bestSplit(df, Seq("x"), "target", Seq(0, 1), Criterion.Entropy).get
     val b = search.best.get.candidate
     // 2.0 is in the edge set, so the binned winner must equal the exact one
-    assert(b == exact)
+    assert(b.feature == exact.feature && b.threshold == exact.threshold)
+    assert(math.abs(b.informationGain - exact.informationGain) < 1e-12)
+    assert(math.abs(b.parentCriterion - exact.parentCriterion) < 1e-12)
   }
 }

@@ -123,23 +123,24 @@ class TreeSpec extends AnyFunSuite {
       when(pmod(hash(col("sepal_length"), col("petal_length")), lit(7)) === 0, lit(null))
         .otherwise(col("target")))
     val prefiltered = dirty.where(col("target").isNotNull)
-    for (agg <- Seq(true, false)) {
-      val m1 = DecisionTreeClassifier(maxDepth = Some(3), useAggregatedHistogram = agg)
+    // both level searches: exact (melt pipeline) and binned (aggregate)
+    for (bins <- Seq(None, Some(16))) {
+      val m1 = DecisionTreeClassifier(maxDepth = Some(3), maxBins = bins)
         .fit(dirty, "target")
-      val m2 = DecisionTreeClassifier(maxDepth = Some(3), useAggregatedHistogram = agg)
+      val m2 = DecisionTreeClassifier(maxDepth = Some(3), maxBins = bins)
         .fit(prefiltered, "target")
       assert(sameTree(m1.tree, m2.tree),
-        s"null-target rows leaked into training (useAggregatedHistogram=$agg)")
+        s"null-target rows leaked into training (maxBins=$bins)")
     }
   }
 
   test("degenerate fits: single-class data -> one leaf; empty input fails loudly") {
     val single = makeDf(strTarget = false, withCat = false)
       .withColumn("target", org.apache.spark.sql.functions.lit(1))
-    for (agg <- Seq(true, false)) {
-      val m = DecisionTreeClassifier(maxDepth = Some(3), useAggregatedHistogram = agg)
+    for (bins <- Seq(None, Some(16))) {
+      val m = DecisionTreeClassifier(maxDepth = Some(3), maxBins = bins)
         .fit(single, "target")
-      assert(m.tree == LeafNode(1), s"pure node must be a leaf (agg=$agg)")
+      assert(m.tree == LeafNode(1), s"pure node must be a leaf (maxBins=$bins)")
     }
     val empty = makeDf(strTarget = false, withCat = false).limit(0)
     val e = intercept[Exception](DecisionTreeClassifier(maxDepth = Some(2)).fit(empty, "target"))

@@ -4,15 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** r20 verdict #6: the exact-at-width wide fit returns to the bench as
-  * `fit_depth4_entropy_scalable_wide190` — the melted-histogram PIPELINE
-  * path over the per-feature SAMPLED candidate set (maxBins GK edges;
-  * counts at each sampled candidate stay exact, only the candidate set is
-  * subsampled — the Meehan-style trade the verdict names). This spec is
-  * the required correctness differential: on sf0.01, the pipeline path
-  * must build the SAME tree as the binned aggregated path at the bench
-  * entry's width (190 features = 4 base + 186 derived), since both
-  * search the identical candidate set with exact counts.
+/** The binned fit at the reference's flagship width (190 features = 4 base
+  * + 186 derived, the `fit_depth4_entropy_*_wide190` bench frame) against
+  * the exact melt pipeline over the same frame with every feature snapped
+  * to the fit's quantile edges: both search the identical candidate set
+  * (maxBins GK edges, exact counts at each edge), so they must build the
+  * same tree. shrinkDtype is off on both sides so the snapped values are
+  * the edges themselves.
   */
 class WideScalableFitSpec extends AnyFunSuite {
 
@@ -21,23 +19,16 @@ class WideScalableFitSpec extends AnyFunSuite {
   test("wide190 pipeline (sampled-candidate) fit matches the aggregated binned tree on sf0.01") {
     val wide = graft.tools.WideFrame.frame(
       spark, "/root/testdata/sf0.01", nDerived = 186, repartitionTo = None)
-    val aggregated = DecisionTreeClassifier(maxDepth = Some(2),
-      criterion = Criterion.Entropy, maxBins = Some(32)).fit(wide, "l_returnflag")
-    val pipeline = DecisionTreeClassifier(maxDepth = Some(2),
-      criterion = Criterion.Entropy, maxBins = Some(32),
-      useAggregatedHistogram = false).fit(wide, "l_returnflag")
-    // identical structure/thresholds/distributions; gain metadata may
-    // differ in the last ulp between the column-expression and driver
-    // float paths (same tolerance as SplitSearchSpec's differentials)
-    def same(a: TreeNode, b: TreeNode): Boolean = (a, b) match {
-      case (LeafNode(x), LeafNode(y)) => x == y
-      case (SplitNode(f1, t1, g1, c1, d1, l1, r1), SplitNode(f2, t2, g2, c2, d2, l2, r2)) =>
-        f1 == f2 && t1 == t2 && d1 == d2 &&
-          math.abs(g1 - g2) < 1e-12 && math.abs(c1 - c2) < 1e-12 &&
-          same(l1, l2) && same(r1, r2)
-      case _ => false
-    }
-    assert(same(aggregated.tree, pipeline.tree),
+    val features = wide.columns.toSeq.filterNot(_ == "l_returnflag")
+    assert(features.size == 190)
+    val (edges, _) = DecisionTreeClassifier.quantileBins(wide, features, 32)
+    val aggregated = DecisionTreeClassifier(maxDepth = Some(2), criterion = Criterion.Entropy,
+      maxBins = Some(32), shrinkDtype = false).fit(wide, "l_returnflag")
+    val pipeline = DecisionTreeClassifier(maxDepth = Some(2), criterion = Criterion.Entropy,
+      shrinkDtype = false).fit(BinnedRef.snapped(wide, edges), "l_returnflag")
+    // gain metadata may differ in the last ulp between the driver-side
+    // and column-expression float paths
+    assert(BinnedRef.sameTree(aggregated.tree, pipeline.tree, 1e-12),
       s"\naggregated: ${aggregated.tree}\npipeline: ${pipeline.tree}")
   }
 }
